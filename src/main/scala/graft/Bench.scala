@@ -96,7 +96,7 @@ object Bench {
     * throughput per core is lower than the few-core one (turbo / bandwidth),
     * which caps ANY job's N→4N efficiency below 1.0; this measures that
     * ceiling so the pipeline's efficiency can be read against it. */
-  private[graft] def calibrate(threads: Int, bufBytes: Int, millis: Long = 3000): Double = {
+  private def calibrate(threads: Int, bufBytes: Int, millis: Long = 3000): Double = {
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val counts = new java.util.concurrent.atomic.AtomicLongArray(threads)
     // start barrier: buffer initialization (64 MB/thread for the DRAM tier)
@@ -221,7 +221,7 @@ object Bench {
     //  - hw_ceiling_mem: saturating streaming-read bandwidth — the memory
     //    subsystem's N→4N ceiling (~0.42 on this single-socket VM), the
     //    honest floor for a scan-dominated pipeline: the parquet scan stage
-    //    ALONE scales at 0.54-0.58 here (BenchProbe decomposition), so the
+    //    ALONE scales at 0.54-0.58 here (BASELINE.md stage decomposition), so the
     //    full transform cannot exceed it in-process. A real N→4N multi-NODE
     //    scale-out multiplies memory channels with the cores and does not
     //    share this ceiling.

@@ -14,19 +14,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * left-to-right non-overlapping, until no table pair remains). Work is
   * O(len²) hash probes per DISTINCT word and independent of table size, so
   * a 100k-merge production table costs the same per word as a 10-rule one —
-  * unlike the chained-`replace` fold in
-  * [[graft.textops.TextOps.bpeSegmentFold]], whose plan is O(merges) string
-  * passes per word and stops codegenning past O(100) rules (64 KB method /
-  * constant-pool limits).
+  * unlike a chained-`replace` fold (rule k applied as one string pass over
+  * the rank-(k−1) result), whose plan is O(merges) string passes per word
+  * and stops codegenning past O(100) rules (64 KB method / constant-pool
+  * limits). That fold is the semantics this kernel states: the DuckDB
+  * oracle of q_bpe_segment generates it, and TextOpsSpec keeps it as the
+  * reference the kernel is checked against.
   *
-  * PRECONDITION — rank-consistent table: any rule whose side is a merge
-  * product must appear AFTER the rule producing it. Every trained table
-  * (ours or any published tokenizer's) satisfies this by construction — a
-  * symbol cannot be chosen before it exists — and under it the min-rank
-  * loop is exactly the fold's rank-order rewrite (a later merge can only
-  * create pairs INVOLVING its new symbol, whose rules all rank later, so
-  * no earlier rule's occurrence is ever created after its pass).
-  * Equivalence is spec-pinned at 1k+ learned merges (TextOpsSpec).
+  * Supported tables are rank-consistent, and only those: any rule whose
+  * side is a merge product must appear AFTER the rule producing it. Every
+  * trained table (ours or any published tokenizer's) satisfies this by
+  * construction — a symbol cannot be chosen before it exists — and under
+  * it the min-rank loop is exactly the fold's rank-order rewrite (a later
+  * merge can only create pairs INVOLVING its new symbol, whose rules all
+  * rank later, so no earlier rule's occurrence is ever created after its
+  * pass). On a hand-written table that breaks this order the kernel's
+  * output is unspecified. Equivalence is spec-pinned at 1k+ learned merges
+  * and on random trained tables (TextOpsSpec).
   *
   * Zipf makes word frequencies extremely skewed, so each task keeps a
   * bounded per-thread word→subwords cache (the standard tokenizer-apply

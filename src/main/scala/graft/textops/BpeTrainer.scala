@@ -19,11 +19,11 @@ import graft.functions.BpeKernel
   *
   * Chosen-merge semantics are EXACTLY the fold's: applying rule k+1 to the
   * fold-k segmentation is by definition the fold-(k+1) segmentation, so
-  * the incremental state never diverges from what
-  * [[TextOps.bpeSegmentFold]] would compute with the learned prefix — the
-  * argmax each round therefore matches the former per-iteration Spark
-  * aggregation row for row (count ties broken by pair codepoint order,
-  * Spark's binary string sort). */
+  * the incremental state never diverges from what the rank-order fold (the
+  * semantics [[TextOps.bpeSegment]] states) computes with the learned
+  * prefix — the argmax each round therefore matches the former
+  * per-iteration Spark aggregation row for row (count ties broken by pair
+  * codepoint order, Spark's binary string sort). */
 private[textops] object BpeTrainer {
 
   private final case class Entry(count: Long, a: String, b: String)

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 
 import graft.textops.TextOps
 
@@ -8,6 +10,34 @@ class TextOpsSpec extends SparkSpec {
   import spark.implicits._
 
   lazy val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+  /** The reference semantics of [[TextOps.bpeSegment]] — the rank-order
+    * chained-replace fold the q_bpe_segment DuckDB oracle also generates.
+    * Symbols ride in U+0001-fenced cells ("\\u0001sym\\u0001") so adjacent
+    * rewrites never share boundary characters: "a b a b" merges to "ab ab"
+    * in ONE pass. Input chars split by the regex `.` (a full code point in
+    * both Java and RE2); inputs must not contain U+0001 themselves. Its plan
+    * is O(merges) string passes per word, so it serves only as the oracle
+    * the kernel is checked against. */
+  private def bpeFold(text: Column, merges: Seq[(String, String)]): Column = {
+    val F = "\u0001"
+    def cell(s: String) = F + s + F
+    transform(TextOps.tokens(TextOps.normalized(text)), w => {
+      val cells = array_join(
+        transform(regexp_extract_all(w, lit("."), lit(0)),
+          c => concat(lit(F), c, lit(F))), "")
+      val merged = merges.foldLeft(cells) { case (s, (a, b)) =>
+        replace(s, lit(cell(a) + cell(b)), lit(cell(a + b)))
+      }
+      split(trim(merged, F), F + F)
+    })
+  }
+
+  /** per-doc segmentation of `d` through `plan`. */
+  private def segmentBy(d: DataFrame, plan: Column => Column): Map[Long, Seq[List[String]]] =
+    d.select(col("doc_id"), plan(col("text")).as("s")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[String]](1).map(_.toList).toSeq)
+      .toMap
 
   test("token count / stopword hits / punct on known strings") {
     val df = Seq(
@@ -61,30 +91,17 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bpeSegment applies merges in rank order with one-pass adjacent rewrites") {
-    import spark.implicits._
     val merges = Seq("t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n")
-    val out = Seq((1L, "the then bathe thth in")).toDF("doc_id", "text")
-      .select(graft.textops.TextOps.bpeSegment(col("text"), merges).as("s"))
-      .head().getSeq[scala.collection.Seq[String]](0).map(_.toList)
+    val d = Seq((1L, "the then bathe thth in")).toDF("doc_id", "text")
+    val out = segmentBy(d, TextOps.bpeSegment(_, merges))(1L)
     assert(out(0) == Seq("the"))            // t+h then th+e chain
     assert(out(1) == Seq("the", "n"))       // no e+n merge
     assert(out(2) == Seq("b", "a", "the"))  // rank order: t+h before a+n? a is not adjacent n
     // the fence property: BOTH adjacent t-h pairs merge in ONE pass
     assert(out(3) == Seq("th", "th"))
     assert(out(4) == Seq("in"))
-  }
-
-  test("bpeSegmentKernel states the fold's rewrite on the demonstrative table") {
-    import spark.implicits._
-    val merges = Seq("t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n")
-    val out = Seq((1L, "the then bathe thth in")).toDF("doc_id", "text")
-      .select(graft.textops.TextOps.bpeSegmentKernel(col("text"), merges).as("s"))
-      .head().getSeq[scala.collection.Seq[String]](0).map(_.toList)
-    assert(out(0) == Seq("the"))
-    assert(out(1) == Seq("the", "n"))
-    assert(out(2) == Seq("b", "a", "the"))
-    assert(out(3) == Seq("th", "th"))
-    assert(out(4) == Seq("in"))
+    // and the reference fold states the same rewrite
+    assert(segmentBy(d, bpeFold(_, merges))(1L) == out)
   }
 
   /** deterministic synthetic vocabulary for the tokenizer-scale tests:
@@ -110,21 +127,38 @@ class TextOpsSpec extends SparkSpec {
     val merges = graft.textops.TextOps.trainBpe(d, numMerges = 1400)
     assert(merges.length >= 1024,
       s"corpus must support >= 1024 merges, learned ${merges.length}")
-    // the fold at this depth: a >1k-deep chained-replace plan — the shape
-    // that caps the fold in production, still evaluable here as the oracle
+    // the fold at this depth: a >1k-deep chained-replace plan — too slow
+    // for production, still evaluable here as the oracle
     val probe = d.limit(12)
-    val fold = probe
-      .select(col("doc_id"), graft.textops.TextOps.bpeSegmentFold(col("text"), merges).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[String]](1).map(_.toList)).toMap
-    val kern = probe
-      .select(col("doc_id"), graft.textops.TextOps.bpeSegmentKernel(col("text"), merges).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[String]](1).map(_.toList)).toMap
+    val fold = segmentBy(probe, bpeFold(_, merges))
+    val kern = segmentBy(probe, TextOps.bpeSegment(_, merges))
     assert(kern == fold, "kernel must equal the fold on a rank-consistent table")
-    // and the public bpeSegment switched to the kernel plan at this size
-    val auto = probe
-      .select(col("doc_id"), graft.textops.TextOps.bpeSegment(col("text"), merges).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[scala.collection.Seq[String]](1).map(_.toList)).toMap
-    assert(auto == fold)
+  }
+
+  test("trained tables segment identically through the kernel and the fold (property)") {
+    // small alphabets and short words make merge products collide, the
+    // shape in which a later merge could recreate an earlier rule's pair
+    val corpus: Gen[(Seq[(Long, String)], Int, Long)] = for {
+      alpha <- Gen.choose(2, 4).map(n => "abcd".take(n))
+      nDocs <- Gen.choose(1, 5)
+      texts <- Gen.listOfN(nDocs, for {
+        nWords <- Gen.choose(1, 8)
+        words <- Gen.listOfN(nWords, Gen.choose(1, 10).flatMap(len =>
+          Gen.listOfN(len, Gen.oneOf(alpha.toSeq)).map(_.mkString)))
+      } yield words.mkString(" "))
+      numMerges <- Gen.choose(1, 30)
+      minCount <- Gen.choose(1L, 2L)
+    } yield (texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, numMerges, minCount)
+    var seed = org.scalacheck.rng.Seed(20261017L)
+    (0 until 40).foreach { _ =>
+      corpus.apply(Gen.Parameters.default, seed).foreach { case (rows, numMerges, minCount) =>
+        val d = rows.toDF("doc_id", "text")
+        val merges = TextOps.trainBpe(d, numMerges, minCount)
+        assert(segmentBy(d, TextOps.bpeSegment(_, merges)) == segmentBy(d, bpeFold(_, merges)),
+          s"corpus=$rows merges=$merges")
+      }
+      seed = seed.next
+    }
   }
 
   test("trainBpe learns 8k+ merges in bounded time; kernel roundtrips them") {
@@ -149,7 +183,7 @@ class TextOpsSpec extends SparkSpec {
     // must have collapsed below their codepoint length (the table bites)
     val rows = d.select(
       split(lower(trim(col("text"))), "\\s+").as("ws"),
-      graft.textops.TextOps.bpeSegmentKernel(col("text"), merges).as("ss"))
+      TextOps.bpeSegment(col("text"), merges).as("ss"))
       .collect()
     var words = 0L; var collapsed = 0L
     rows.foreach { r =>

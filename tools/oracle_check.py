@@ -12,20 +12,25 @@ def canon(rel):
     vals = df.astype(str).values.tolist()
     vals.sort()
     return sorted(df.columns), vals
-for name in sorted(os.listdir(out)):
-    if not os.path.isdir(f"{out}/{name}"): continue
+def check(name):
+    # Verify writes nothing for a query that throws
+    if not glob.glob(f"{out}/{name}/*.parquet"):
+        return "MISSING (no Spark output)"
     spark = con.sql(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')")
-    if name not in oracle:
-        print(f"{name}: rows={len(spark.df())} (no oracle — rows-only)")
-        continue
-    ora = con.sql(oracle[name])
-    sc, sv = canon(spark); oc, ov = canon(ora)
+    sc, sv = canon(spark); oc, ov = canon(con.sql(oracle[name]))
     if sc != oc:
-        print(f"{name}: SCHEMA MISMATCH spark={sc} oracle={oc}")
-    elif len(sv) != len(ov):
-        print(f"{name}: ROWCOUNT MISMATCH spark={len(sv)} oracle={len(ov)}")
-    elif sv != ov:
+        return f"SCHEMA MISMATCH spark={sc} oracle={oc}"
+    if len(sv) != len(ov):
+        return f"ROWCOUNT MISMATCH spark={len(sv)} oracle={len(ov)}"
+    if sv != ov:
         bad = [(a, b) for a, b in zip(sv, ov) if a != b][:3]
-        print(f"{name}: VALUE MISMATCH rows={len(sv)} first_diffs={bad}")
-    else:
-        print(f"{name}: values=OK rows={len(sv)}")
+        return f"VALUE MISMATCH rows={len(sv)} first_diffs={bad}"
+    return f"values=OK rows={len(sv)}"
+# walk the oracle names, not the output directories, so a query that
+# produced no output is reported instead of skipped
+failed = 0
+for name in sorted(oracle):
+    result = check(name)
+    print(f"{name}: {result}")
+    failed += not result.startswith("values=OK")
+sys.exit(1 if failed else 0)
