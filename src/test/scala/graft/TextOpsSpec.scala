@@ -100,8 +100,15 @@ class TextOpsSpec extends SparkSpec {
     // the fence property: BOTH adjacent t-h pairs merge in ONE pass
     assert(out(3) == Seq("th", "th"))
     assert(out(4) == Seq("in"))
-    // and the reference fold states the same rewrite
-    assert(segmentBy(d, bpeFold(_, merges))(1L) == out)
+  }
+
+  test("bpeSegmentKernel states the fold's rewrite on the demonstrative table") {
+    // bpeSegment is the bpe_encode_words kernel plan; the fold is its reference
+    val merges = Seq("t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n")
+    val d = Seq((1L, "the then bathe thth in")).toDF("doc_id", "text")
+    val fold = segmentBy(d, bpeFold(_, merges))(1L)
+    assert(fold == Seq(Seq("the"), Seq("the", "n"), Seq("b", "a", "the"), Seq("th", "th"), Seq("in")))
+    assert(segmentBy(d, TextOps.bpeSegment(_, merges))(1L) == fold)
   }
 
   /** deterministic synthetic vocabulary for the tokenizer-scale tests:
