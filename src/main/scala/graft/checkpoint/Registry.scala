@@ -125,18 +125,10 @@ final class Registry(root: String, spark: SparkSession,
       .map(_.withColumn("sink", lit(sink)))
   }
 
-  /** (bytes, files) one sink's snapshot for a group added — the per-write
+  /** per-group (bytes, files) one sink's snapshots added — the per-write
     * output stats the reference tracks per output worker
-    * (libbeat/outputs/metrics.go), straight from the table metadata: no
-    * filesystem walk. */
-  def sinkGroupStats(sink: String, group: Int): (Long, Long) =
-    sinkTable(sink).snapshotForTxn(txnKey(group))
-      .map(s => (s.added.map(_.size).sum, s.added.size.toLong))
-      .getOrElse((0L, 0L))
-
-  /** per-group (bytes, files) for one sink in ONE metadata read — the
-    * metrics roll-up shape; [[sinkGroupStats]]'s per-(sink, group) form
-    * would re-read and re-resolve the table state once per pair. */
+    * (libbeat/outputs/metrics.go), in ONE metadata read: no filesystem walk
+    * and no per-group re-read of the table state. */
   def sinkGroupStatsAll(sink: String): Map[Int, (Long, Long)] =
     sinkTable(sink).state().snapshots.flatMap { s =>
       s.txn.filter(_.startsWith("group-")).map(t =>

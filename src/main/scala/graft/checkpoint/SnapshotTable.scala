@@ -2,7 +2,7 @@ package graft.checkpoint
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A minimal, from-scratch SNAPSHOT TABLE FORMAT — the Iceberg metadata
@@ -21,6 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                                            version; the LARGEST version
   *                                            is the table state
   * }}}
+  *
+  * A version doc holds the table's whole snapshot history — per snapshot its
+  * id, run, operation, optional txn key and the data files it `added` — plus
+  * the txn-key map. The history is the ONLY record of data files: the live
+  * file list is derived from it (an append adds its files, a merge replaces
+  * the list with its own), so each data file is written once per doc.
   *
   * Commit protocol (optimistic concurrency, Iceberg-style):
   *   1. the writer stages parquet files and MOVES them under data/ with
@@ -52,26 +58,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * previous one). Every version's metadata is retained, so any historical
   * snapshot remains readable (time travel).
   *
-  * Manifest splitting (the Iceberg manifest-file shape): up to
-  * `inlineFileLimit` files the version doc carries the file list inline;
-  * above it the list rides MANIFEST files (`metadata/m-*.json`) and the
-  * version doc holds only (path, count, bytes) pointers. An append REUSES
-  * the previous version's manifests untouched and writes ONE new manifest
-  * for just its added files, so per-commit metadata cost is O(added), not
-  * O(table) — the property that keeps a high-commit-rate 100 TB sink table
-  * from rewriting a million-entry file list on every micro-batch. The
-  * manifest list is coalesced back to one file when it exceeds
-  * `manifestCoalesceAt` (Iceberg's merge-manifests), bounding read fan-out;
-  * a CAS loser deletes the manifests it wrote, and [[expireSnapshots]]
-  * reclaims manifests referenced only by expired versions plus aged
-  * orphans. The embedded snapshot history and txn-key map still grow with
-  * commit count (they must — [[readCommittedTxns]] and idempotence read
-  * them); at sink commit-log rates that is KBs/day.
+  * Growth: every commit rewrites the whole doc, so a doc grows with the
+  * commit count (one entry per snapshot and per data file it added) — the
+  * history must stay, since [[readCommittedTxns]], txn idempotence and time
+  * travel read it. At sink commit-log rates that is KBs/day;
+  * [[expireSnapshots]] bounds the number of docs kept, not their size.
   */
 final class SnapshotTable(val root: String, spark: SparkSession,
-                          val runId: String = Registry.newRunId(),
-                          val inlineFileLimit: Int = SnapshotTable.DefaultInlineFileLimit,
-                          val manifestCoalesceAt: Int = SnapshotTable.DefaultManifestCoalesceAt) {
+                          val runId: String = Registry.newRunId()) {
 
   import SnapshotTable._
 
@@ -83,22 +77,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
   // ------------------------------------------------------------- metadata
 
   /** current committed state; version 0 = the empty table. */
-  def state(): TableState = {
-    if (!fs.exists(metaDir)) return TableState.Empty
-    val versions = fs.listStatus(metaDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-    if (versions.isEmpty) return TableState.Empty
-    parseState(readBytes(fs, versionPath(versions.max)))
-  }
+  def state(): TableState =
+    liveVersions().lastOption.fold(TableState.Empty)(readState)
 
-  /** parse a version doc and RESOLVE its manifests (if any) into the full
-    * file list — readers always see `files` complete either way. */
-  private def parseState(bytes: Array[Byte]): TableState = {
-    val st = parseMeta(bytes)
-    if (st.manifestRefs.isEmpty) st
-    else st.copy(files = st.manifestRefs.flatMap(m => readManifest(m.path)))
-  }
+  private def readState(v: Long): TableState =
+    parseMeta(readBytes(fs, versionPath(v)))
 
   private def versionPath(v: Long): Path = new Path(metaDir, f"v$v%06d.json")
 
@@ -119,69 +102,12 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     publishAtomic(fs, tmp, versionPath(prev.version + 1))
   }
 
-  /** plan the next version's file-list layout: inline below
-    * `inlineFileLimit`, manifest files above it. Appends (`replace=false`)
-    * carry the previous version's manifests untouched and spill only
-    * (previous inline files +) `added` into ONE new manifest; merges
-    * (`replace=true`) start fresh. Coalesces to a single manifest past
-    * `manifestCoalesceAt`. Returns (manifest refs, inline files, manifest
-    * paths WRITTEN by this call — the caller deletes them if its CAS
-    * loses, so racing writers leave no debris). */
-  private def planFiles(prev: TableState, added: Seq[FileEntry],
-                        replace: Boolean): (Seq[ManifestRef], Seq[FileEntry], Seq[String]) = {
-    val carried = if (replace) Seq.empty[ManifestRef] else prev.manifestRefs
-    val pending =
-      (if (replace || prev.manifestRefs.nonEmpty) Seq.empty else prev.files) ++ added
-    if (carried.isEmpty && pending.size <= inlineFileLimit)
-      return (Seq.empty, pending, Seq.empty)
-    var written = List.empty[String]
-    var refs = carried
-    if (pending.nonEmpty) {
-      val r = writeManifest(pending); written ::= r.path; refs = refs :+ r
-    }
-    if (refs.size > manifestCoalesceAt) {
-      val one = writeManifest(refs.flatMap(m => readManifest(m.path)))
-      written ::= one.path
-      refs = Seq(one)
-    }
-    (refs, Seq.empty, written)
-  }
-
-  private def writeManifest(entries: Seq[FileEntry]): ManifestRef = {
-    fs.mkdirs(metaDir)
-    val name = s"m-$runId-${java.util.UUID.randomUUID().toString.take(8)}.json"
-    val doc = Mapper.createObjectNode()
-    val arr = doc.putArray("entries")
-    entries.foreach { f =>
-      val o = arr.addObject(); o.put("path", f.path); o.put("size", f.size)
-    }
-    val out = fs.create(new Path(metaDir, name), false)
-    try out.write(Mapper.writeValueAsBytes(doc)) finally out.close()
-    ManifestRef(s"metadata/$name", entries.size, entries.map(_.size).sum)
-  }
-
-  private def readManifest(relPath: String): Seq[FileEntry] =
-    parseManifest(readBytes(fs, new Path(root, relPath)))
-
-  private def buildMeta(prev: TableState, snap: SnapshotInfo,
-                        manifests: Seq[ManifestRef],
-                        files: Seq[FileEntry]): ObjectNode = {
+  private def buildMeta(prev: TableState, snap: SnapshotInfo): ObjectNode = {
     val doc = Mapper.createObjectNode()
     doc.put("format", "graft-snapshot-v1")
     doc.put("version", prev.version + 1)
     doc.put("snapshot_id", snap.id)
     prev.snapshotId.foreach(doc.put("parent_snapshot_id", _))
-    if (manifests.nonEmpty) {
-      val mArr = doc.putArray("manifests")
-      manifests.foreach { m =>
-        val o = mArr.addObject()
-        o.put("path", m.path); o.put("count", m.count); o.put("bytes", m.bytes)
-      }
-    }
-    val fArr = doc.putArray("files")
-    files.foreach { f =>
-      val o = fArr.addObject(); o.put("path", f.path); o.put("size", f.size)
-    }
     val tk = doc.putObject("txn_keys")
     (prev.txnKeys ++ snap.txn.map(_ -> snap.id)).foreach { case (k, v) => tk.put(k, v) }
     val sArr = doc.putArray("snapshots")
@@ -229,18 +155,15 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * Retention is [[expireSnapshots]]' `keepVersions` — expired versions
     * are no longer time-travelable, exactly like Iceberg's
     * `expire_snapshots`. */
-  def liveVersions(): Seq[Long] = {
-    if (!fs.exists(metaDir)) return Seq.empty
-    fs.listStatus(metaDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
+  def liveVersions(): Seq[Long] =
+    if (!fs.exists(metaDir)) Seq.empty
+    else fs.listStatus(metaDir).flatMap(f => versionOf(f.getPath.getName))
       .sorted.toSeq
-  }
 
   /** committed state AT `version`; None once expired (or never committed). */
   def stateAt(version: Long): Option[TableState] = {
     val p = versionPath(version)
-    if (version < 1 || !fs.exists(p)) None else Some(parseState(readBytes(fs, p)))
+    if (version < 1 || !fs.exists(p)) None else Some(readState(version))
   }
 
   /** time-travel read: the table exactly as of `version`. None when the
@@ -312,12 +235,10 @@ final class SnapshotTable(val root: String, spark: SparkSession,
       val moved = moveIn(listParquet(fs, tmp))
       fs.delete(tmp, true)
       val snap = SnapshotInfo(newSnapId(st), runId, txn, "merge", moved)
-      val (refs, inline, written) = planFiles(st, moved, replace = true)
-      if (casCommit(st, buildMeta(st, snap, refs, inline)))
+      if (casCommit(st, buildMeta(st, snap)))
         return CommitResult(snap.id, alreadyCommitted = false,
           moved.map(_.size).sum, moved.size)
       moved.foreach(f => fs.delete(new Path(root, f.path), false)) // lost: retry
-      written.foreach(p => fs.delete(new Path(root, p), false))
       attempt += 1
     }
     throw new java.io.IOException(
@@ -331,8 +252,11 @@ final class SnapshotTable(val root: String, spark: SparkSession,
     * expired versions (a merge's copy-on-write rewrite strands its
     * predecessors' files — this is what reclaims them). Returns the number
     * of data files deleted. Run as a maintenance job, never concurrently
-    * with readers that may still be resolving an expired version; writers
-    * are unaffected (they CAS against the newest version only). Note
+    * with readers that may still be resolving an expired version. Live
+    * writers are protected by `orphanGraceMs` alone: their commits CAS
+    * against the newest version, but their not-yet-committed files (moved
+    * into data/, staged under `_tmp-*`, or a candidate doc) look exactly
+    * like crash debris until they are older than the grace. Note
     * [[readCommittedTxns]] is an append-only-table view: on such tables
     * every snapshot's added files are still in the current file list, so
     * expiry never deletes files that view can reach. */
@@ -340,29 +264,17 @@ final class SnapshotTable(val root: String, spark: SparkSession,
                       orphanGraceMs: Long = 3600000L): Int = {
     require(keepVersions >= 1, "must keep at least the current version")
     if (!fs.exists(metaDir)) return 0
-    val versions = fs.listStatus(metaDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .sorted
+    val versions = liveVersions()
     val (drop, keep) = versions.splitAt(math.max(0, versions.length - keepVersions))
-    val keptStates = keep.map(v => parseState(readBytes(fs, versionPath(v))))
-    val retained: Set[String] = keptStates.flatMap(_.files.map(_.path)).toSet
-    val retainedManifests: Set[String] =
-      keptStates.flatMap(_.manifestRefs.map(_.path)).toSet
+    val retained: Set[String] = keep.flatMap(readState(_).files.map(_.path)).toSet
     var deleted = 0
-    // resolve dropped versions BEFORE deleting anything — versions may
-    // share manifest files
-    val dropStates = drop.map(v => v -> parseState(readBytes(fs, versionPath(v))))
-    dropStates.foreach { case (v, st) =>
-      st.files.foreach { f =>
+    drop.foreach { v =>
+      readState(v).files.foreach { f =>
         if (!retained.contains(f.path) &&
             fs.delete(new Path(root, f.path), false)) deleted += 1
       }
       fs.delete(versionPath(v), false)
     }
-    dropStates.flatMap(_._2.manifestRefs.map(_.path)).distinct
-      .filterNot(retainedManifests)
-      .foreach(p => fs.delete(new Path(root, p), false))
     // ORPHANS: data files referenced by NO retained version — crash debris
     // from a writer that died between moving files in and its CAS commit.
     // The age grace protects a LIVE concurrent writer's just-moved,
@@ -377,29 +289,36 @@ final class SnapshotTable(val root: String, spark: SparkSession,
             fs.delete(f.getPath, false)) deleted += 1
       }
     }
-    // orphan MANIFESTS: a writer that died between writeManifest and its CAS
+    // METADATA DEBRIS: every aged entry of metadata/ that is not a version
+    // doc — a writer that died between creating its candidate doc (.tmp-*)
+    // and publishAtomic, and side files an older format version kept there
+    // (no version doc refers to them any more).
     fs.listStatus(metaDir).foreach { f =>
-      val n = f.getPath.getName
-      if (n.startsWith("m-") && !retainedManifests.contains(s"metadata/$n") &&
-          f.getModificationTime < cutoff)
+      if (versionOf(f.getPath.getName).isEmpty && f.getModificationTime < cutoff)
         fs.delete(f.getPath, false)
     }
-    // TEMP DEBRIS: a writer that died between creating its candidate
-    // metadata (.tmp-*) and publishAtomic, or mid-append/merge before its
-    // staging directory (_tmp-append-*/_tmp-merge-*) was consumed. Never
-    // referenced by any version, so only the age grace gates deletion —
-    // without this pass a crashed writer's staged parquet (potentially the
-    // size of a whole commit) accumulates forever.
-    fs.listStatus(metaDir).foreach { f =>
-      if (f.getPath.getName.startsWith(".tmp-") && f.getModificationTime < cutoff)
-        fs.delete(f.getPath, false)
-    }
+    // STAGING DEBRIS: an append/merge that died before its staging directory
+    // (_tmp-append-*/_tmp-merge-*) was consumed. Spark writes INTO
+    // subdirectories, which leaves the staging directory's own mtime at its
+    // creation time, so the grace is judged on the newest mtime anywhere in
+    // the tree — a live write that stages for longer than the grace keeps
+    // touching it. Without this pass a crashed writer's staged parquet
+    // (potentially the size of a whole commit) accumulates forever.
     fs.listStatus(new Path(root)).foreach { f =>
-      if (f.getPath.getName.startsWith("_tmp-") && f.getModificationTime < cutoff)
+      if (f.getPath.getName.startsWith("_tmp-") && newestMtime(f) < cutoff)
         fs.delete(f.getPath, true)
     }
     deleted
   }
+
+  /** newest modification time in `f`'s tree; Long.MaxValue (never aged)
+    * when part of it vanishes mid-walk — its writer is alive and cleaning. */
+  private def newestMtime(f: FileStatus): Long =
+    try {
+      if (!f.isDirectory) f.getModificationTime
+      else fs.listStatus(f.getPath)
+        .foldLeft(f.getModificationTime)((m, c) => math.max(m, newestMtime(c)))
+    } catch { case _: java.io.FileNotFoundException => Long.MaxValue }
 
   // ------------------------------------------------------------- internals
 
@@ -438,11 +357,9 @@ final class SnapshotTable(val root: String, spark: SparkSession,
         return alreadyCommittedResult(st, t)
       }
       val snap = SnapshotInfo(newSnapId(st), runId, txn, "append", moved)
-      val (refs, inline, written) = planFiles(st, moved, replace = false)
-      if (casCommit(st, buildMeta(st, snap, refs, inline)))
+      if (casCommit(st, buildMeta(st, snap)))
         return CommitResult(snap.id, alreadyCommitted = false,
           moved.map(_.size).sum, moved.size)
-      written.foreach(p => fs.delete(new Path(root, p), false))
     }
     throw new java.io.IOException(
       s"append into $root failed after $MaxCommitAttempts CAS attempts — " +
@@ -457,16 +374,6 @@ object SnapshotTable {
     * fault (rename/link returning false without progress), not contention —
     * fail loudly instead of spinning rewrite jobs forever. */
   private val MaxCommitAttempts = 50
-
-  /** inline-file-list ceiling: past this many files the version doc points
-    * at manifest files instead (64 entries ≈ 8 KB inline — registry-scale
-    * docs stay single-read; sink tables split). */
-  val DefaultInlineFileLimit = 64
-
-  /** manifest-count ceiling: one append = one manifest, so unbounded
-    * appends would mean unbounded reader fan-out; past this the commit
-    * coalesces all manifests into one (Iceberg's merge-manifests). */
-  val DefaultManifestCoalesceAt = 32
 
   /** the commit point's atomic claim primitive, publish-once semantics
     * ACROSS PROCESSES: exactly one caller of all concurrent callers (same
@@ -495,21 +402,23 @@ object SnapshotTable {
     else { fs.delete(tmp, false); false }
   }
 
-  final case class FileEntry(path: String, size: Long)
+  /** the version a metadata file name holds (`v<N>.json`), if it is a doc. */
+  private def versionOf(name: String): Option[Long] =
+    if (name.startsWith("v") && name.endsWith(".json"))
+      name.substring(1, name.length - 5).toLongOption
+    else None
 
-  /** pointer to a manifest file holding `count` [[FileEntry]] rows
-    * totalling `bytes` (counts let planners size reads without opening
-    * the manifest). */
-  final case class ManifestRef(path: String, count: Int, bytes: Long)
+  final case class FileEntry(path: String, size: Long)
 
   final case class SnapshotInfo(id: String, run: String, txn: Option[String],
                                 operation: String, added: Seq[FileEntry])
 
+  /** one committed version; `files` is the live file list, derived from
+    * `snapshots` (see [[parseMeta]]). */
   final case class TableState(version: Long, snapshotId: Option[String],
                               files: Seq[FileEntry],
                               txnKeys: Map[String, String],
-                              snapshots: Seq[SnapshotInfo],
-                              manifestRefs: Seq[ManifestRef] = Seq.empty)
+                              snapshots: Seq[SnapshotInfo])
   object TableState {
     val Empty: TableState = TableState(0L, None, Seq.empty, Map.empty, Seq.empty)
   }
@@ -524,6 +433,10 @@ object SnapshotTable {
     try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
   }
 
+  /** parse a version doc. The live file list is the fold of the history:
+    * an append adds its files, a merge replaces the list with its own. Keys
+    * this parser does not use (e.g. a `files` list an older writer stored
+    * next to the history) are ignored. */
   private def parseMeta(bytes: Array[Byte]): TableState = {
     val doc = Mapper.readTree(bytes)
     def fileEntries(n: com.fasterxml.jackson.databind.JsonNode): Seq[FileEntry] = {
@@ -554,30 +467,11 @@ object SnapshotTable {
       }
       buf.toSeq
     }
-    val manifests = Option(doc.get("manifests")).map { n =>
-      val it = n.elements()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[ManifestRef]
-      while (it.hasNext) {
-        val m = it.next()
-        buf += ManifestRef(m.get("path").asText(), m.get("count").asInt(),
-          m.get("bytes").asLong())
-      }
-      buf.toSeq
-    }.getOrElse(Seq.empty)
-    TableState(doc.get("version").asLong(),
-      Option(doc.get("snapshot_id")).map(_.asText()),
-      fileEntries(doc.get("files")), txn, snaps, manifests)
-  }
-
-  /** parse a manifest file: {"entries":[{path,size}…]}. */
-  private def parseManifest(bytes: Array[Byte]): Seq[FileEntry] = {
-    val it = Mapper.readTree(bytes).get("entries").elements()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[FileEntry]
-    while (it.hasNext) {
-      val f = it.next()
-      buf += FileEntry(f.get("path").asText(), f.get("size").asLong())
+    val files = snaps.foldLeft(Vector.empty[FileEntry]) { (acc, s) =>
+      if (s.operation == "merge") s.added.toVector else acc ++ s.added
     }
-    buf.toSeq
+    TableState(doc.get("version").asLong(),
+      Option(doc.get("snapshot_id")).map(_.asText()), files, txn, snaps)
   }
 
   private def listParquet(fs: FileSystem, dir: Path): Seq[(Path, Long)] = {

@@ -111,6 +111,15 @@ class AnnSpec extends SparkSpec {
         .map(_.map(_.toSeq).toSeq).toSeq)
   }
 
+  test("nearest_centroids falls back deterministically on a NaN component") {
+    import spark.implicits._
+    val cents = Array(Array(1f, 0f), Array(0f, 1f), Array(1f, 1f))
+    val got = Seq(Array(Float.NaN, 1f), Array(0f, 2f)).toDF("v")
+      .select(graft.functions.nearest_centroids(col("v"), cents, nprobe = 2))
+      .collect().map(_.getSeq[Int](0))
+    assert(got.toSeq == Seq(Seq(0, 1), Seq(1, 2)))
+  }
+
   test("PQ kernels: codes in range, ADC score tracks exact cosine") {
     import graft.functions.PqKernel
     val cbs = Ann.pqCodebooks(embeds, m = 8, ksub = 16)

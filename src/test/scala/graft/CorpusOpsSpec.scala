@@ -109,6 +109,19 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
+  test("decontaminateInline and decontaminateBloom keep a null-text document, hits = 0") {
+    val train = Seq((1L, "the quick brown fox jumps"), (2L, null: String))
+      .toDF("doc_id", "text")
+    val bench = docs(100L -> "a quick brown fox ran")
+    for ((name, out) <- Seq(
+        "inline" -> CorpusOps.decontaminateInline(train, bench, n = 3),
+        "bloom" -> CorpusOps.decontaminateBloom(train, bench, n = 3))) {
+      val r = out.filter(col("doc_id") === 2L).collect()
+      assert(r.length == 1, name)
+      assert(r(0).getAs[Long]("hits") == 0L && !r(0).getAs[Boolean]("contaminated"), name)
+    }
+  }
+
   test("decontaminateBloom: zero bloom hits is definitively clean (no FNs)") {
     // every truly-contaminated doc MUST reach the verification join: a Bloom
     // filter can only over-approximate, so hits>0 docs can never be in the

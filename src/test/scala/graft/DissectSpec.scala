@@ -68,6 +68,12 @@ class DissectSpec extends SparkSpec {
     assert(r.getAs[String]("b") == "two")
   }
 
+  test("greedy skips a multi-byte delimiter in whole-delimiter steps") {
+    val r = fields("%{a->}ab%{b}", "xababy")
+    assert(r.getAs[String]("a") == "x")
+    assert(r.getAs[String]("b") == "y")
+  }
+
   test("greedy is discarded on skip/pointer/indirect fields (field.go:263-278)") {
     // the reference's named-skip/pointer/indirect constructors never receive
     // the greedy flag — only normal/append fields pad-strip. With %{?pad->}
@@ -88,6 +94,11 @@ class DissectSpec extends SparkSpec {
     assert(run("%{cls#1}%{month#2}%{day#2}", "A0118 ").isNullAt(0))
     // not enough input → fail
     assert(run("%{key#10}", "foobar").isNullAt(0))
+  }
+
+  test("fixed-length field whose following literal does not match → null") {
+    assert(fields("%{a#2}-%{b}", "ab-cd").getAs[String]("b") == "cd")
+    assert(run("%{a#2}-%{b}", "ab+cd").isNullAt(0))
   }
 
   test("indirect %{?key} %{&key} emits under the captured name (map variant)") {

@@ -31,6 +31,18 @@ class GrokStructSpec extends SparkSpec {
     assert(df.collect().map(_.getString(0)).toSeq == Seq("INFO", "ERROR", "Z"))
   }
 
+  test("level_translate passes an unknown letter through under ANSI mode") {
+    val prev = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val df = Seq("W", "Q").toDF("lvl").select(level_translate(col("lvl")).as("level"))
+      assert(df.collect().map(_.getString(0)).toSeq == Seq("WARN", "Q"))
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
+
   test("no match → null struct") {
     val df = Seq("garbage").toDF("text")
       .select(grok_struct(col("text"), vehiclePattern, vehicleFields).as("g"))

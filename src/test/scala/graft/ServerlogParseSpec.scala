@@ -81,6 +81,12 @@ class ServerlogParseSpec extends SparkSpec {
     assert(r.getAs[Map[String, String]]("extra") == null)
   }
 
+  test("overlapping ##JIDU##JIDU## markers are a json_error, not a crash") {
+    val r = parseOne(okLine + " ##JIDU##JIDU##")
+    assert(r.getAs[String]("status") == "ok")
+    assert(r.getAs[Map[String, String]]("extra") == null)
+  }
+
   test("non-numeric line number → fields withheld (script_error path)") {
     val r = parseOne(okLine.replace("[41]", "[x41]"))
     assert(r.getAs[String]("status") == "ok")

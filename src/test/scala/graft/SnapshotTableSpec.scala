@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.SnapshotTable
@@ -162,48 +164,52 @@ class SnapshotTableSpec extends SparkSpec {
       t.readSnapshot("no-such").isEmpty)
   }
 
+  private def metaNames(root: String): Set[String] =
+    new java.io.File(s"$root/metadata").listFiles().map(_.getName).toSet
+
+  // The two tests below keep the names they had when the file list could
+  // also ride side files in metadata/; their bodies now check what the
+  // history-only layout must still guarantee.
   test("manifest splitting: file list spills past the inline limit, appends " +
     "reuse prior manifests, coalesce bounds fan-out, expiry reclaims") {
     val root = Files.createTempDirectory("graft-snaptbl").toString
-    val t = new SnapshotTable(root, spark,
-      inlineFileLimit = 2, manifestCoalesceAt = 3)
-    def one(i: Int) = Seq((i, s"v$i")).toDF("id", "v").coalesce(1)
-    (1 to 6).foreach(i => t.append(one(i), txn = Some(s"b-$i")))
-    // v1–v2 inline; v3 crosses the 2-file limit → one manifest of all 3
-    assert(t.stateAt(2).get.manifestRefs.isEmpty)
-    val v3 = t.stateAt(3).get
-    assert(v3.manifestRefs.size == 1 && v3.manifestRefs.head.count == 3)
-    // v4–v5 append ONE manifest each, reusing v3's untouched (O(added) commits)
-    val v4 = t.stateAt(4).get
-    assert(v4.manifestRefs.size == 2 &&
-      v4.manifestRefs.head == v3.manifestRefs.head)
-    assert(t.stateAt(5).get.manifestRefs.size == 3)
-    // v6 would be 4 manifests > coalesceAt=3 → merged back to one
-    val v6 = t.stateAt(6).get
-    assert(v6.manifestRefs.size == 1 && v6.manifestRefs.head.count == 6)
-    // resolution is complete at every layout era, and reads agree
-    assert(v6.files.size == 6 && t.read().get.count() == 6)
-    assert(t.readVersion(2).get.count() == 2)
-    assert(t.readVersion(4).get.count() == 4)
-    // a reader with DEFAULT thresholds resolves the split layout identically
+    val t = new SnapshotTable(root, spark)
+    def rows(i: Int) = Seq((2 * i, s"v$i"), (2 * i + 1, s"w$i")).toDF("id", "v")
+      .repartition(2)
+    val n = 12
+    (1 to n).foreach(i => t.append(rows(i), txn = Some(s"b-$i")))
+    // every version reads exactly the rows committed up to it
+    (1 to n).foreach { v =>
+      val st = t.stateAt(v).get
+      assert(st.files == st.snapshots.flatMap(_.added), s"v$v file list")
+      assert(t.readVersion(v).get.count() == 2L * v, s"v$v rows")
+    }
+    // a second table object on the same root resolves the same files
     val reader = new SnapshotTable(root, spark)
-    assert(reader.read().get.count() == 6)
-    assert(reader.state().files.toSet == v6.files.toSet)
-    // txn idempotence still holds across the layout switch
-    assert(t.append(one(3), txn = Some("b-3")).alreadyCommitted)
-    // expiry drops old versions' manifests; disk holds exactly the live refs
-    t.expireSnapshots(keepVersions = 1, orphanGraceMs = 0)
-    val onDisk = new java.io.File(s"$root/metadata").listFiles()
-      .map(_.getName).filter(_.startsWith("m-")).map(n => s"metadata/$n").toSet
-    assert(onDisk == t.state().manifestRefs.map(_.path).toSet)
-    assert(t.read().get.count() == 6)
+    assert(reader.state().files == t.state().files)
+    assert(reader.read().get.count() == 2L * n)
+    // txn idempotence holds after many appends
+    assert(t.append(rows(3), txn = Some("b-3")).alreadyCommitted)
+    assert(t.state().version == n)
+    // the newest doc records each data file once: in its snapshot's `added`
+    val docPath = Paths.get(root, "metadata", f"v$n%06d.json")
+    val doc = new ObjectMapper().readTree(docPath.toFile)
+    assert(!doc.has("files") && !doc.has("manifests"))
+    val text = new String(Files.readAllBytes(docPath), "UTF-8")
+    t.state().files.foreach { f =>
+      assert(text.split(java.util.regex.Pattern.quote(f.path), -1).length - 1 == 1,
+        s"${f.path} recorded more than once")
+    }
+    // expiry leaves only the live version docs in metadata/
+    t.expireSnapshots(keepVersions = 2, orphanGraceMs = 0)
+    assert(metaNames(root) == Set(f"v${n - 1}%06d.json", f"v$n%06d.json"))
+    assert(t.read().get.count() == 2L * n)
   }
 
   test("manifest mode: COW merge replaces manifests; racing writers leave " +
     "no manifest debris") {
     val root = Files.createTempDirectory("graft-snaptbl").toString
-    val t = new SnapshotTable(root, spark,
-      inlineFileLimit = 1, manifestCoalesceAt = 8)
+    val t = new SnapshotTable(root, spark)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -214,17 +220,55 @@ class SnapshotTableSpec extends SparkSpec {
     t.merge(Seq((1, 100L)).toDF("k", "v").coalesce(1), keys = Seq("k"), None)
     val rows = t.read().get.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(rows == Map(1 -> 100L, 2 -> 2L, 3 -> 3L, 4 -> 4L))
-    // merge started a FRESH manifest line (no carried refs from the appends)
+    // the merge's own files replace the list
     val st = t.state()
-    assert(st.snapshots.last.operation == "merge")
-    assert(st.manifestRefs.size == 1 || st.manifestRefs.isEmpty)
-    // every manifest on disk is referenced by SOME live version — CAS
-    // losers deleted theirs
-    val live = t.liveVersions()
-      .flatMap(v => t.stateAt(v).get.manifestRefs.map(_.path)).toSet
-    val onDisk = new java.io.File(s"$root/metadata").listFiles()
-      .map(_.getName).filter(_.startsWith("m-")).map(n => s"metadata/$n").toSet
-    assert(onDisk == live)
+    assert(st.version == 5 && st.snapshots.last.operation == "merge")
+    assert(st.files == st.snapshots.last.added)
+    // CAS losers leave nothing in metadata/: only the version docs
+    assert(metaNames(root) == t.liveVersions().map(v => f"v$v%06d.json").toSet)
+  }
+
+  test("reads a doc that also lists files outside the history") {
+    // Docs written before the history became the only record of data files
+    // carry a `files` list next to it, and past a size threshold a
+    // `manifests` list of side files in metadata/ that hold the entries.
+    val root = Files.createTempDirectory("graft-snaptbl").toString
+    val t = new SnapshotTable(root, spark)
+    (1 to 3).foreach(i => t.append(Seq((i, s"v$i")).toDF("id", "v").coalesce(1), None))
+    t.merge(Seq((1, "m")).toDF("id", "v").coalesce(1), keys = Seq("id"), None)
+    val snaps = t.state().snapshots
+    // what each version listed: appends accumulate, the merge (v4) replaces
+    val listed = Map(
+      1 -> snaps.take(1).flatMap(_.added), 2 -> snaps.take(2).flatMap(_.added),
+      3 -> snaps.take(3).flatMap(_.added), 4 -> snaps(3).added)
+    val mapper = new ObjectMapper()
+    def entries(fs: Seq[SnapshotTable.FileEntry]) = {
+      val a = mapper.createArrayNode()
+      fs.foreach(f => a.addObject().put("path", f.path).put("size", f.size))
+      a
+    }
+    (1 to 4).foreach { v =>
+      val p = Paths.get(root, "metadata", f"v$v%06d.json")
+      val doc = mapper.readTree(p.toFile).asInstanceOf[ObjectNode]
+      if (v == 3) { // the side-file shape: empty inline list + one pointer
+        val side = mapper.createObjectNode()
+        side.set[JsonNode]("entries", entries(listed(3)))
+        Files.write(Paths.get(root, "metadata", "m-old-1.json"),
+          mapper.writeValueAsBytes(side))
+        doc.putArray("manifests").addObject().put("path", "metadata/m-old-1.json")
+          .put("count", 3).put("bytes", listed(3).map(_.size).sum)
+        doc.set[JsonNode]("files", entries(Nil))
+      } else doc.set[JsonNode]("files", entries(listed(v)))
+      Files.write(p, mapper.writeValueAsBytes(doc))
+    }
+    (1 to 4).foreach(v => assert(t.stateAt(v).get.files == listed(v), s"v$v"))
+    assert(t.state().files == listed(4))
+    assert(t.readVersion(3).get.count() == 3)
+    assert(t.read().get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap ==
+      Map(1 -> "m", 2 -> "v2", 3 -> "v3"))
+    // expiry reclaims the aged side file along with the expired docs
+    t.expireSnapshots(keepVersions = 1, orphanGraceMs = 0)
+    assert(metaNames(root) == Set("v000004.json"))
   }
 
   test("expireSnapshots reclaims crashed writers' temp debris") {
@@ -238,10 +282,10 @@ class SnapshotTableSpec extends SparkSpec {
     val staleAppend = new java.io.File(s"$root/_tmp-append-dead-writer-y")
     val staleMerge = new java.io.File(s"$root/_tmp-merge-dead-writer-z")
     staleAppend.mkdirs(); staleMerge.mkdirs()
-    java.nio.file.Files.write(
-      new java.io.File(staleAppend, "part-0.parquet").toPath, Array[Byte](1, 2, 3))
+    val stalePart = new java.io.File(staleAppend, "part-0.parquet")
+    java.nio.file.Files.write(stalePart.toPath, Array[Byte](1, 2, 3))
     val old = System.currentTimeMillis() - 7200000L
-    Seq(staleMeta, staleAppend, staleMerge).foreach(_.setLastModified(old))
+    Seq(staleMeta, stalePart, staleAppend, staleMerge).foreach(_.setLastModified(old))
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
     assert(!staleMeta.exists() && !staleAppend.exists() && !staleMerge.exists(),
       "aged temp debris must be reclaimed")
@@ -250,6 +294,31 @@ class SnapshotTableSpec extends SparkSpec {
     fresh.mkdirs()
     t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
     assert(fresh.exists(), "fresh temp state is protected by the grace window")
+    assert(t.read().get.count() == 1)
+  }
+
+  test("expireSnapshots judges a staging dir's age by its newest file") {
+    val root = Files.createTempDirectory("graft-snaptbl").toString
+    val t = new SnapshotTable(root, spark)
+    t.append(Seq((1, "a")).toDF("id", "v"), None)
+    val old = System.currentTimeMillis() - 7200000L
+    // Spark writes into a subdirectory of the staging dir, so a long-running
+    // live write leaves the dir's own mtime old while its files are fresh
+    def staged(name: String): (java.io.File, java.io.File) = {
+      val dir = new java.io.File(s"$root/$name")
+      val sub = new java.io.File(dir, "_temporary/0")
+      sub.mkdirs()
+      val part = new java.io.File(sub, "part-0.parquet")
+      java.nio.file.Files.write(part.toPath, Array[Byte](1, 2, 3))
+      Seq(sub, sub.getParentFile, dir).foreach(_.setLastModified(old))
+      (dir, part)
+    }
+    val (live, _) = staged("_tmp-append-live-writer")
+    val (dead, deadPart) = staged("_tmp-append-dead-writer")
+    deadPart.setLastModified(old)
+    t.expireSnapshots(keepVersions = 1, orphanGraceMs = 3600000L)
+    assert(live.exists(), "a staging dir holding a fresh file is a live write")
+    assert(!dead.exists(), "a fully aged staging dir is crash debris")
     assert(t.read().get.count() == 1)
   }
 

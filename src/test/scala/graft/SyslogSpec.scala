@@ -169,6 +169,17 @@ class SyslogSpec extends SparkSpec {
     assert(r.getBoolean(I("valid")))
   }
 
+  test("RFC3164 pid and sequence past Int.MaxValue stay unset, not wrapped") {
+    val p = parse("<34>Oct 11 22:14:15 mymachine su[4294967297]: hi",
+      mode = "rfc3164", year = 2020)
+    assert(str(p, I("program")) == "su" && str(p, I("message")) == "hi")
+    assert(p.isNullAt(I("pid")))
+    val s = parse("<190>4294967297: Feb 8 18:55:31.306: %SEC-11: list denied",
+      mode = "rfc3164", year = 2018)
+    assert(int(s, I("priority")) == 190)
+    assert(s.isNullAt(I("sequence")))
+  }
+
   test("RFC3164 defaultTzSeconds applies only without an explicit offset") {
     val line = "<34>Oct 11 22:14:15 mymachine su: hi"
     val r0 = parse(line, year = 2020, tz = 0)
